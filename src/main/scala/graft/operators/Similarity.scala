@@ -2677,6 +2677,9 @@ object Similarity {
                          maxBucketLoad: Option[Int] = None): DataFrame = {
     require(numTables * numPlanes <= 64,
       "numTables * numPlanes must fit a packed 64-bit signature")
+    // 64 planes would wrap the per-table mask (1L << 64 == 1, mask 0)
+    // and put every vector in bucket 0
+    require(numPlanes <= 63, s"numPlanes must be <= 63, got $numPlanes")
     require(maxBucketSize.isEmpty || maxBucketLoad.isEmpty,
       "pick one of maxBucketSize (absolute) / maxBucketLoad (relative)")
     // All plane-sign bits packed into ONE BIGINT by the native
@@ -2690,11 +2693,13 @@ object Similarity {
       .withColumn("__sig", expr(
         s"graft_hyperplane_sig($vecCol, ${numTables * numPlanes}, $dim)"))
     val mask = (1L << numPlanes) - 1
+    // buckets wider than 31 bits overflow an INT (ANSI cast error)
+    val bucketType = if (numPlanes <= 31) "INT" else "BIGINT"
     val bucketRows = bits.select(
       col(idCol),
       explode(array((0 until numTables).map { t =>
         struct(lit(t).as("tbl"),
-          expr(s"CAST(shiftright(__sig, ${t * numPlanes}) & $mask AS INT)").as("bucket"))
+          expr(s"CAST(shiftright(__sig, ${t * numPlanes}) & $mask AS $bucketType)").as("bucket"))
       }: _*)).as("tb"))
       .select(col(idCol), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
     val base = maxBucketLoad match {
@@ -2723,9 +2728,9 @@ object Similarity {
     // candidates where the extra exchanges are a net loss — measured
     // both ways in round 21.
     // math.pow, not (1L << numPlanes): the require() above permits
-    // numPlanes up to 64 (at numTables = 1), where the long shift wraps
-    // (<< 64 = 1) or goes negative (<< 63) and would misclassify the
-    // sparsest possible layout as dense (ADVICE r21)
+    // numPlanes up to 63 (at numTables = 1), where the long shift goes
+    // negative and would misclassify the sparsest possible layout as
+    // dense (ADVICE r21)
     val dense = numTables.toDouble / math.pow(2.0, numPlanes) >= 0.5
     val a0 = base.select(col("tbl"), col("bucket"), col(idCol).as("a"))
     val a = if (dense) Par.widen(a0, col("tbl"), col("bucket")) else a0

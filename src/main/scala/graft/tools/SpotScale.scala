@@ -30,8 +30,10 @@ object SpotScale {
   private val Offset = 10000000L
 
   def main(args: Array[String]): Unit = {
+    require(args.length >= 3, "usage: SpotScale <srcDir> <dstDir> <factor>")
     val Array(src, dst, factorS) = args.take(3)
-    val factor = factorS.toInt
+    val factor = factorS.toIntOption.getOrElse(throw
+      new IllegalArgumentException(s"factor must be an integer: '$factorS'"))
     require(factor >= 1, "factor >= 1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.local(cpus)

@@ -252,6 +252,19 @@ class SimilaritySpec extends SparkSpec {
     assert(lsh.nonEmpty) // (1,2) at cos 0.8 should survive 8 tables
   }
 
+  test("hyperplaneLshPairs: numPlanes = 64 is rejected (the per-table " +
+      "mask would wrap to 0), 63 is accepted") {
+    val e = intercept[IllegalArgumentException] {
+      Similarity.hyperplaneLshPairs(emb, numPlanes = 64, numTables = 1,
+        dim = 2)
+    }
+    assert(e.getMessage.contains("numPlanes must be <= 63"))
+    val lsh = rows(Similarity.hyperplaneLshPairs(emb, threshold = 0.5,
+      numPlanes = 63, numTables = 1, dim = 2)).toSet
+    assert(lsh.subsetOf(
+      rows(Dedup.embeddingNearDupPairs(emb, threshold = 0.5)).toSet))
+  }
+
   test("annRecall counts hits and divides only when denominators are > 0") {
     import spark.implicits._
     val exact = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L))

@@ -4,8 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.SparkSpec
 import graft.operators.{Dedup, TextAnalysis}
@@ -1083,4 +1083,84 @@ object StreamLaws extends Properties("graft.streams") {
         .agg(kmv(col("h"))).collect().head.getDouble(0)
       got == want && gotTexts == wantTexts
     }
+
+  // ---- replay watermark guard, every fold sink -------------------------
+
+  /** One row shape every fold sink can read: each sink picks its own
+   * columns out of it and ignores the rest. */
+  private def foldSinkRows(ids: org.apache.spark.sql.DataFrame) =
+    ids.selectExpr("value AS doc_id", "value", "value % 3 AS v",
+      "value + 1 AS cost", "value AS x_s", "value * 10 AS v_milli",
+      "IF(value % 2 = 0, 'a', 'b') AS source",
+      "IF(value % 2 = 0, 'a', 'b') AS event_type",
+      "IF(value % 3 = 0, 'en', 'fr') AS lang",
+      "IF(value % 2 = 0, 'raw', 'target') AS corpus",
+      "IF(value % 2 = 0, 'truth', 'candidate') AS side",
+      "1L AS query_id", "value AS neighbor_id",
+      "value DIV 2 + 1 AS rank",
+      "timestamp_seconds(1700000000 + value * 3600) AS ts",
+      "concat('doc ', value, ' café words') AS text")
+
+  property("every fold sink: after compactIndex folds batch 0, a fresh " +
+      "checkpoint re-delivering batch 0 writes no batch dir") = {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.operators.Curation
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ids = 0L until 6L
+    def tmp(p: String) = Files.createTempDirectory(p).toString
+    val static = foldSinkRows(ids.toDF("value"))
+    val valueRef = tmp("law-gvr") + "/c"
+    Curation.valueCounts(static, "value").write.parquet(valueRef)
+    val groupRef = tmp("law-ggr") + "/c"
+    Curation.valueCountsByGroup(static, "value", "source")
+      .write.parquet(groupRef)
+    val catRef = tmp("law-gcr") + "/c"
+    Curation.catCounts(static, "lang").write.parquet(catRef)
+    val rollup = "law_guard_rollup"
+    def dropRollup() = Seq("", "__swap_tmp", "__swap_backup")
+      .foreach(sfx => graft.tables.Tables.dropTable(spark, rollup + sfx))
+    // (sink, guarded leg under partialsPath, start(input, partials, out, cp))
+    val sinks: Seq[(String, String,
+        (DataFrame, String, String, String) => StreamingQuery)] = Seq(
+      ("anomalySink", "", Streams.anomalySink(_, _, _, _)),
+      ("driftSink", "", Streams.driftSink(_, valueRef, _, _, _)),
+      ("driftByGroupSink", "", Streams.driftByGroupSink(_, groupRef, _, _, _)),
+      ("dsirSink", "", Streams.dsirSink(_, _, _, _, buckets = 32)),
+      ("rankingEvalSink", "", Streams.rankingEvalSink(_, _, _, _, k = 3)),
+      ("sampleSink", "", Streams.sampleSink(_, _, _, _, k = 3)),
+      ("trendSink", "", Streams.trendSink(_, _, _, _)),
+      ("latenessSink", "", Streams.latenessSink(_, _, _, _)),
+      ("constraintSink", "",
+        Streams.constraintSink(_, _, _, _, Seq("nonneg" -> "v >= 0"))),
+      ("mixDriftSink", "", Streams.mixDriftSink(_, catRef, _, _, _)),
+      ("rollupSink", "", (in, p, _, cp) =>
+        Streams.rollupSink(in, rollup, p, cp, Seq("source"), Seq("v"))),
+      ("encodingAuditSink", "", Streams.encodingAuditSink(_, _, _, _)),
+      ("privacyAuditSink", "", Streams.privacyAuditSink(_, _, _, _,
+        Seq("lang"), "source", k = 2L, l = 1L, tMicro = 500000L)),
+      ("budgetSelectSink", "", Streams.budgetSelectSink(_, _, _, _,
+        "source", "v", "cost", budget = 5L)),
+      ("cardSink", "/langs", Streams.cardSink(_, _, _, _)))
+    dropRollup()
+    try Prop.all(sinks.map { case (name, leg, start) =>
+      val parts = tmp("law-gp")
+      val out = tmp("law-go")
+      def deliverBatch0(): Unit = {
+        val mem = MemoryStream[Long]
+        val q = start(foldSinkRows(mem.toDF()), parts, out, tmp("law-gcp"))
+        try { mem.addData(ids: _*); q.processAllAvailable() }
+        finally q.stop()
+      }
+      def dirs() = new java.io.File(parts + leg).listFiles()
+        .map(_.getName).filter(_.startsWith("batch=")).toSet
+      deliverBatch0()
+      Streams.compactIndex(spark, parts + leg)(identity)
+      val folded = dirs()
+      deliverBatch0()
+      (folded == Set("batch=-1") && dirs() == folded) :| name
+    }: _*)
+    finally dropRollup()
+  }
 }

@@ -1995,4 +1995,39 @@ class StreamsSpec extends SparkSpec {
     Seq("_pqcodes", "_pqmeta").foreach(sfx =>
       Tables.dropTable(spark, "pqres" + sfx))
   }
+
+  test("latenessSink: every non-empty micro-batch runs the same 9 Spark " +
+      "jobs (isEmpty, partials write, tree re-read, audit write)") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    implicit val sqlCtx = spark.sqlContext
+    val parts = Files.createTempDirectory("latjobs-p").toString
+    val out = Files.createTempDirectory("latjobs-o").toString
+    val cp = Files.createTempDirectory("latjobs-cp").toString
+    val mem = MemoryStream[(String, Timestamp)]
+    val q = Streams.latenessSink(mem.toDF().toDF("event_type", "ts"),
+      parts, out, cp)
+    // the batch id of every job this query starts
+    val jobBatches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("sql.streaming.queryId") == q.id.toString)
+          .foreach(p => jobBatches.add(p.getProperty("streaming.sql.batchId")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Seq(0, 1, 2).foreach { b =>
+        mem.addData(("a", ts(s"2024-01-0${b + 1} 00:00:00")),
+          ("b", ts(s"2024-01-0${b + 1} 06:00:00")))
+        q.processAllAvailable()
+      }
+    } finally {
+      q.stop()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val perBatch = jobBatches.asScala.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    assert(perBatch == Map("0" -> 9, "1" -> 9, "2" -> 9))
+  }
 }

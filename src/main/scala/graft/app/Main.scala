@@ -226,33 +226,42 @@ object Main {
     rows.length.toLong
   }
 
-  /** Fetch stage: JSON URL templates go through the paginated DSv2 source
-   * (+ JSON materialization); anything else is read as parquet. */
-  def fetch(spark: SparkSession, c: Config): DataFrame = {
-    val fetched =
-      if (c.input.contains("{page}"))
-        RestIngest.readJson(spark, Map("url" -> c.input, "objKey" -> c.objKey,
-          "tsField" -> c.tsCol) ++
-          c.since.map("since" -> _) ++ c.to.map("to" -> _))
-      else {
-        val df0 = spark.read.parquet(c.input)
-        // TIMESTAMP(NANOS) parquet columns surface as BIGINT under the
-        // nanosAsLong session conf — convert to a real timestamp so the
-        // time-range literals compare as timestamps, not longs
-        val df =
-          if (df0.columns.contains(c.tsCol) &&
-              df0.schema(c.tsCol).dataType == org.apache.spark.sql.types.LongType)
-            df0.withColumn(c.tsCol,
-              org.apache.spark.sql.functions.expr(s"timestamp_micros(`${c.tsCol}` div 1000)"))
-          else df0
-        (c.since, c.to) match {
-          case (Some(s), Some(t)) if df.columns.contains(c.tsCol) =>
-            Relational.timeRange(df, c.tsCol, s, t)
-          case _ => df
-        }
-      }
-    fetched
-  }
+  /** Fetch stage. JSON URL templates go through the paginated DSv2 source
+   * via [[RestIngest.readJson]], which fetches the feed ONCE: the raw
+   * pages and the typed rows are eager local checkpoints built here (3
+   * jobs), so the caller's normalize, sort, `isEmpty` and write never
+   * touch the API again and load one snapshot of it. Losing an executor
+   * after the fetch fails the job loudly; it never re-fetches. Anything
+   * else is read as parquet and filtered to `tsCol >= since` and
+   * `tsCol < to`, each bound applied on its own; a bound given without a
+   * `tsCol` column is an `IllegalArgumentException`. */
+  def fetch(spark: SparkSession, c: Config): DataFrame =
+    if (c.input.contains("{page}"))
+      RestIngest.readJson(spark, Map("url" -> c.input, "objKey" -> c.objKey,
+        "tsField" -> c.tsCol) ++
+        c.since.map("since" -> _) ++ c.to.map("to" -> _))
+    else {
+      import org.apache.spark.sql.functions.{col, expr, lit}
+      val df0 = spark.read.parquet(c.input)
+      if ((c.since.isDefined || c.to.isDefined) &&
+          !df0.columns.contains(c.tsCol))
+        throw new IllegalArgumentException(
+          s"--since/--to filter on '${c.tsCol}', which is not a column of " +
+            s"${c.input} (columns: ${df0.columns.mkString(", ")}); " +
+            "name the timestamp column with --ts-col")
+      // TIMESTAMP(NANOS) parquet columns surface as BIGINT under the
+      // nanosAsLong session conf — convert to a real timestamp so the
+      // time-range literals compare as timestamps, not longs
+      val df =
+        if (df0.columns.contains(c.tsCol) &&
+            df0.schema(c.tsCol).dataType == org.apache.spark.sql.types.LongType)
+          df0.withColumn(c.tsCol, expr(s"timestamp_micros(`${c.tsCol}` div 1000)"))
+        else df0
+      val ts = col(c.tsCol)
+      def bound(v: String) = lit(v).cast(df.schema(c.tsCol).dataType)
+      (c.since.map(ts >= bound(_)) ++ c.to.map(ts < bound(_)))
+        .reduceOption(_ && _).fold(df)(df.filter)
+    }
 
   /** Runs the pipeline; returns the final row count. Throws on failure;
    * returns -1 on abort-on-empty (reference :243-244 shows a dialog and

@@ -2705,14 +2705,16 @@ object Similarity {
     val base = maxBucketLoad match {
       case Some(load) =>
         // relative cap: bucket size <= max(64, ceil(load * n / 2^planes)),
-        // all integer arithmetic so the DuckDB oracle mirrors it exactly
-        val nb = 1L << numPlanes
+        // all integer arithmetic so the DuckDB oracle mirrors it exactly.
+        // The ceiling is a shift plus a remainder bit, never a divide by
+        // 2^planes (1L << 63 is negative); `mask` is 2^planes - 1
         val kept = bucketRows.groupBy("tbl", "bucket")
           .agg(count(lit(1)).as("__bs"))
           .withColumn("__tot",
             sum("__bs").over(Window.partitionBy("tbl")))
-          .filter(col("__bs") <=
-            greatest(lit(64L), expr(s"($load * __tot + ${nb - 1}) DIV $nb")))
+          .withColumn("__x", expr(s"$load * __tot"))
+          .filter(col("__bs") <= greatest(lit(64L), expr(
+            s"shiftright(__x, $numPlanes) + IF((__x & $mask) != 0, 1, 0)")))
           .select("tbl", "bucket")
         bucketRows.join(kept, Seq("tbl", "bucket"))
       case None => Dedup.capBuckets(bucketRows, Seq("tbl", "bucket"), maxBucketSize)

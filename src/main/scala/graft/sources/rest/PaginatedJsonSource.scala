@@ -25,6 +25,13 @@ import org.apache.spark.unsafe.types.UTF8String
  * [[RestIngest.readJson]] — mirroring how `spark.read.json` splits
  * line-reading from schema inference.
  *
+ * The scan itself is lazy: every action over a frame read from this
+ * source pages the live API again, and reads that straddle a change of
+ * the feed disagree. Batch callers go through [[RestIngest.readJson]],
+ * which pages the feed ONCE into an eager local checkpoint and keeps the
+ * typed rows in another, so one job sees one snapshot (a lost checkpoint
+ * block fails the job; nothing re-fetches).
+ *
  * Scale design:
  *  - **Striped pagination**: partition `i` of `p` fetches pages
  *    `i+1, i+1+p, i+1+2p, ...` and stops at the first empty or short page

@@ -3,6 +3,7 @@ package graft.app
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.sources.rest.CountingPageServer
 import graft.tables.Tables
 
 /** End-to-end CLI pipeline runs (SURVEY.md §7.1 minimum slice) over the
@@ -44,6 +45,76 @@ class MainSpec extends SparkSpec {
     Tables.dropTable(spark, "app_range")
   }
 
+  test("load path honors a lone --since or --to bound") {
+    Tables.dropTable(spark, "app_since")
+    // 692 events at or after the bound and 669 before 2024-01-20; the
+    // two overlap in the 361 of the [since, to) test above
+    assert(Main.run(spark, Main.Config(action = "load",
+      input = s"$sf/events.parquet", table = "app_since", tsCol = "ts",
+      since = Some("2024-01-10 00:00:00"))) == 692L)
+    assert(Main.run(spark, Main.Config(action = "load",
+      input = s"$sf/events.parquet", table = "app_since", tsCol = "ts",
+      to = Some("2024-01-20 00:00:00"))) == 669L)
+    Tables.dropTable(spark, "app_since")
+  }
+
+  test("a time bound on a missing --ts-col column fails loudly") {
+    Tables.dropTable(spark, "app_nots")
+    val e = intercept[IllegalArgumentException] {
+      Main.run(spark, Main.Config(action = "load",
+        input = s"$sf/events.parquet", table = "app_nots",
+        tsCol = "created_at", since = Some("2024-01-10 00:00:00")))
+    }
+    assert(e.getMessage.contains("'created_at'"), e.getMessage)
+    assert(!spark.catalog.tableExists("app_nots"))
+  }
+
+  /** 3 full pages of the default 500 deals plus a short last page. */
+  private val feed: Seq[Seq[Long]] =
+    (0 until 4).map(p => (p * 500L) until (p * 500L + (if (p < 3) 500 else 7)))
+
+  test("REST load fetches every page once: each data page plus one " +
+      "terminal page per other stripe, and no request after Main.fetch") {
+    Tables.dropTable(spark, "app_once")
+    val api = new CountingPageServer(feed)
+    try {
+      assert(Main.run(spark, Main.Config(action = "load", input = api.url,
+        table = "app_once")) == 1507L)
+      // numPartitions = 4 stripes: the stripe holding short page 4 stops
+      // there, the other three each stop at one empty page, 5 to 7
+      assert(api.requests == (1 to 7).map(_ -> 1).toMap)
+    } finally api.close()
+    val api2 = new CountingPageServer(feed)
+    try {
+      val df = Main.fetch(spark, Main.Config(action = "load",
+        input = api2.url, table = "app_once"))
+      val fetched = api2.requests
+      assert(fetched == (1 to 7).map(_ -> 1).toMap)
+      assert(!df.isEmpty && df.count() == 1507L)
+      Tables.loadOverwrite(df, "app_once")
+      assert(api2.requests == fetched)
+    } finally {
+      api2.close()
+      Tables.dropTable(spark, "app_once")
+    }
+  }
+
+  test("REST load is one snapshot of the feed: every row from a page's " +
+      "first and only read") {
+    Tables.dropTable(spark, "app_snap")
+    val api = new CountingPageServer(feed)
+    try {
+      assert(Main.run(spark, Main.Config(action = "load", input = api.url,
+        table = "app_snap")) == 1507L)
+      // `served` is off the Normalize INT list, so it lands as a string
+      assert(rows(spark.table("app_snap").select("served").distinct()) ==
+        Seq(Seq("1")))
+    } finally {
+      api.close()
+      Tables.dropTable(spark, "app_snap")
+    }
+  }
+
   test("abort-on-empty: no table is created, returns -1") {
     Tables.dropTable(spark, "app_empty")
     val n = Main.run(spark, Main.Config(action = "load",
@@ -51,6 +122,17 @@ class MainSpec extends SparkSpec {
       since = Some("2030-01-01 00:00:00"), to = Some("2030-01-02 00:00:00")))
     assert(n == -1L)
     assert(!spark.catalog.tableExists("app_empty"))
+  }
+
+  test("REST abort-on-empty: an empty feed is fetched once, no table") {
+    Tables.dropTable(spark, "app_rest_empty")
+    val api = new CountingPageServer(Nil)
+    try {
+      assert(Main.run(spark, Main.Config(action = "load", input = api.url,
+        table = "app_rest_empty")) == -1L)
+      assert(api.requests == (1 to 4).map(_ -> 1).toMap)
+      assert(!spark.catalog.tableExists("app_rest_empty"))
+    } finally api.close()
   }
 
   test("load path with --partition-by-date lands a pruned dt layout") {

@@ -263,6 +263,19 @@ class SimilaritySpec extends SparkSpec {
       numPlanes = 63, numTables = 1, dim = 2)).toSet
     assert(lsh.subsetOf(
       rows(Dedup.embeddingNearDupPairs(emb, threshold = 0.5)).toSet))
+    // maxBucketLoad at 63 planes: the cap's ceiling(load * n / 2^63)
+    // must not divide by 1L << 63 (negative). A small corpus sits under
+    // the floor of 64 and keeps every pair; 65 identical vectors share
+    // one bucket past the floor, which the cap drops
+    assert(rows(Similarity.hyperplaneLshPairs(emb, threshold = 0.5,
+      numPlanes = 63, numTables = 1, dim = 2,
+      maxBucketLoad = Some(8))).toSet == lsh)
+    val clones = (1L to 65L).map((_, Array(0.6f, 0.8f)))
+      .toDF("vec_id", "embedding")
+    assert(Similarity.hyperplaneLshPairs(clones, numPlanes = 63,
+      numTables = 1, dim = 2).count() == 65L * 64 / 2)
+    assert(Similarity.hyperplaneLshPairs(clones, numPlanes = 63,
+      numTables = 1, dim = 2, maxBucketLoad = Some(8)).isEmpty)
   }
 
   test("annRecall counts hits and divides only when denominators are > 0") {
